@@ -18,7 +18,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from hudi_examples_spark import registry
-from hudi_examples_spark.session import get_spark
+from hudi_examples_spark.session import get_spark, graft_cpus
 
 #: Headline queries: the flagship TPC-H-style set + the heaviest LLM-pipeline ops.
 HEADLINE = [
@@ -441,6 +441,13 @@ def main() -> None:
     )
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    # which host and width produced this artifact: the session's effective
+    # core count and master, and the cores this process may run on
+    host = {
+        "spark_graft_cpus": graft_cpus(),
+        "master": spark.sparkContext.master,
+        "nproc": len(os.sched_getaffinity(0)),
+    }
     raw_total = round(sum(timings.values()), 3)
     v2_total = round(sum(timings_v2.values()), 3)
     out = {
@@ -467,7 +474,7 @@ def main() -> None:
         },
         "calibration": {"micro_agg_sec": micro_min, "loadavg_1m": _loadavg()},
         "passes": n_passes,
-        "cpus": os.cpu_count(),
+        "host": host,
         "attempts": len(attempts),
         "quiet_waits": quiet_waits,
     }
@@ -515,6 +522,7 @@ def main() -> None:
         "samples": micro_samples,
         "quiet_waits": quiet_waits,
         "sf": out["sf"],
+        "host": host,
     }
     try:
         with open(DAYLOG, "a") as f:

@@ -123,6 +123,24 @@ def _static_exec(spark: SparkSession):
         yield
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
+def _input_partitions(df: DataFrame) -> int:
+    """Partition count of ``df`` as Spark plans it: the width of a ranged
+    layout built from ``df`` (Hudi infers ``hoodie.bulkinsert.shuffle.
+    parallelism`` the same way, from the input's partition count). Read off
+    the physical plan, so no job runs — an adaptive plan reports the output
+    partitioning it was planned with, and a plan without an exchange (a
+    scan) builds its RDD from the file listing alone. Unlike a fraction of
+    ``defaultParallelism`` it follows the input, not the host: an explicit
+    repartition or a shuffle (``spark.sql.shuffle.partitions``) keeps its
+    width on any core count. At least 1: an empty input has no partitions."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        n = plan.initialPlan().outputPartitioning().numPartitions()
+        return n or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n = plan.outputPartitioning().numPartitions() or df._jdf.rdd().getNumPartitions()
+    return max(n, 1)
 from pyspark.sql.window import Window
 
 
@@ -1503,9 +1521,8 @@ class Table:
             .select(F.expr(expr).alias("val"), F.col(META_KEY).alias("key"))
             .where(F.col("val").isNotNull())
         )
-        n = max(self.spark.sparkContext.defaultParallelism // 4, 1)
         (
-            entries.repartitionByRange(n, "val")
+            entries.repartitionByRange(_input_partitions(entries), "val")
             .sortWithinPartitions("val")
             .write.mode("overwrite")
             .parquet(data_dir)
@@ -1927,9 +1944,8 @@ class Table:
         entries = self._record_entries_for(live)
         if entries is None:
             entries = self.spark.createDataFrame([], "key STRING, rel STRING")
-        n = max(self.spark.sparkContext.defaultParallelism // 4, 1)
         (
-            entries.repartitionByRange(n, "key")
+            entries.repartitionByRange(_input_partitions(entries), "key")
             .sortWithinPartitions("key")
             .write.mode("overwrite")
             .parquet(data_dir)
@@ -3704,8 +3720,7 @@ class Table:
         if dedup and self.config.record_key:
             out = self._latest_wins(out)
         if sort_mode == "global_sort" and self.config.record_key:
-            n = max(self.spark.sparkContext.defaultParallelism // 4, 1)
-            rels = self._write_files(out, instant, range_key_layout=n)
+            rels = self._write_files(out, instant, range_key_layout=_input_partitions(out))
         elif sort_mode == "partition_sort" and self.config.record_key:
             sort_cols = [F.col(c) for c in self.config.partition_by] + [F.col(META_KEY)]
             rels = self._write_files(

@@ -109,3 +109,12 @@ def test_bad_mode_rejected(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="sort_mode"):
         t.bulk_insert(_rows(spark, 0, 10), sort_mode="zorted")
+
+
+def test_range_width_follows_the_input_not_the_host(spark):
+    from hudi_examples_spark.table.core import _input_partitions
+
+    assert _input_partitions(_rows(spark).repartition(8)) == 8
+    assert _input_partitions(_rows(spark).repartition(3, "id").groupBy("id").count()) == 3
+    # an input the optimizer proves empty plans no partition at all
+    assert _input_partitions(_rows(spark).where("false")) == 1

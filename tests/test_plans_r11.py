@@ -15,6 +15,7 @@ Two layers:
 
 from __future__ import annotations
 
+import re
 from pathlib import Path
 
 R11 = Path(__file__).resolve().parent.parent / "plans" / "r11"
@@ -39,6 +40,32 @@ def test_dump_ann_exchange_counts():
     assert _count("dedup_embed_ann_after.txt", "Exchange") == 10
 
 
+def _folds(text: str) -> list[str]:
+    """The full text of every ``aggregate(...)`` fold in a plan dump."""
+    out = []
+    for m in re.finditer(r"aggregate\(", text):
+        depth, i = 0, m.end() - 1
+        while True:
+            depth += {"(": 1, ")": -1}.get(text[i], 0)
+            i += 1
+            if depth == 0:
+                break
+        out.append(text[m.start() : i])
+    return out
+
+
+def _struct_folds(text: str) -> list[str]:
+    """Folds whose accumulator or merge builds a struct (the pre-r11 cosine
+    carried (d, na, nb) through one ``struct(...)``/``named_struct`` fold)."""
+    return [f for f in _folds(text) if re.search(r"\b(named_)?struct\(", f)]
+
+
+def test_dump_struct_fold_detected():
+    """The struct-fold check below flags the pre-r11 cosine in its dump."""
+    assert len(_struct_folds((R11 / "sim_knn_join_before.txt").read_text())) == 1
+    assert _struct_folds((R11 / "sim_knn_join_after.txt").read_text()) == []
+
+
 def test_live_cosine_is_three_primitive_folds(spark):
     from hudi_examples_spark.operators.llm_pipeline import sim_knn_join
     from hudi_examples_spark.plans.inspect import explain_str
@@ -46,7 +73,7 @@ def test_live_cosine_is_three_primitive_folds(spark):
 
     text = explain_str(sim_knn_join(spark, SF_SMALL), "formatted")
     assert text.count("aggregate(") == 3, "cosine must stay 3 primitive folds"
-    assert "named_struct" not in text.lower() or text.count("aggregate(") == 3
+    assert _struct_folds(text) == [], "no struct inside the cosine folds"
 
 
 def test_live_ann_join_width_is_pinned(spark):
@@ -61,8 +88,6 @@ def test_live_ann_join_width_is_pinned(spark):
     assert "REPARTITION_BY_NUM" in text
     # and the pair dedup must shuffle scores, not embeddings: no exchange row
     # may carry two array payloads after the join
-    import re
-
     for m in re.finditer(r"Exchange hashpartitioning\(\[?d1", text):
         window = text[m.start() : m.start() + 400]
         assert "emb" not in window, "pair dedup exchange must not carry embeddings"
