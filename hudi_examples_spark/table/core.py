@@ -101,8 +101,7 @@ def _no_aqe(spark: SparkSession):
 
 @contextmanager
 def _static_exec(spark: SparkSession):
-    """Disable AQE for one DATA-path write whose plan cannot benefit from it,
-    keeping the session's configured (scale-parameterized) shuffle width.
+    """Disable AQE for one DATA-path write whose plan cannot benefit from it.
 
     AQE materializes every query stage as its own Spark job — 3-4 driver
     round-trips per commit where a static plan needs one (r10 measured this
@@ -114,9 +113,12 @@ def _static_exec(spark: SparkSession):
     (the partitionBy writer splits per dir either way), and there is no join
     strategy to adapt. Plans WITH joins keep AQE — the runtime broadcast
     decision for delete anti-joins matters at cluster scale. Unlike
-    ``_no_aqe`` (metadata collects), the shuffle width is NOT pinned: it
-    stays ``spark.sql.shuffle.partitions``, which production callers size to
-    their cluster (session.py docstring)."""
+    ``_no_aqe`` (metadata collects), this context pins no width: the caller
+    plans the exchange. ``_write_files`` sizes a hash-on-partition write to
+    the table's live partition dirs (``_static_write_width``), never above
+    ``spark.sql.shuffle.partitions``, which production callers size to their
+    cluster (session.py docstring); bucketed writes keep that session
+    width."""
     prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
@@ -139,13 +141,16 @@ def _input_partitions(df: DataFrame) -> int:
     if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
         n = plan.initialPlan().outputPartitioning().numPartitions()
         return n or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    n = plan.outputPartitioning().numPartitions() or df._jdf.rdd().getNumPartitions()
+    n = plan.outputPartitioning().numPartitions() or plan.execute().getNumPartitions()
     return max(n, 1)
 from pyspark.sql.window import Window
 
 
 #: integer widening lattice for Hudi-style type promotion
 _INT_RANK = {"byte": 1, "short": 2, "integer": 3, "long": 4}
+
+#: bit width of each integral Spark type, by ``simpleString``
+_INT_BITS = {"tinyint": 8, "smallint": 16, "int": 32, "bigint": 64}
 
 
 def _sweep_broken_locks(path: str, ttl_seconds: float) -> None:
@@ -915,7 +920,10 @@ class Table:
                 *exprs
             )
         elif parts:
-            df = df.repartition(*[F.col(c) for c in parts])
+            if range_key_layout or not self._joinless(df):
+                df = df.repartition(*[F.col(c) for c in parts])
+            else:
+                df = df.repartition(self._static_write_width(df), *[F.col(c) for c in parts])
         staging = os.path.join(self.base, ".staging", instant)
         writer = df.write.mode("overwrite")
         if self.config.max_records_per_file:
@@ -938,7 +946,7 @@ class Table:
             bool(write_parts)
             and not preserve_layout
             and not range_key_layout
-            and "Join" not in df._jdf.queryExecution().analyzed().toString()
+            and self._joinless(df)
         )
         try:
             if static_ok:
@@ -965,12 +973,9 @@ class Table:
                 # Zero-row part files (an empty shuffle partition under static
                 # execution emits one) never become table files: they would
                 # inflate the file listing forever and carry no footer stats
-                # for the key-range index. The footer check only runs on files
-                # small enough to possibly be empty.
-                if (
-                    os.path.getsize(src) < 65536
-                    and pq.read_metadata(src).num_rows == 0
-                ):
+                # for the key-range index. Every footer is read, whatever the
+                # file size, so a truncated file of any size fails here.
+                if pq.read_metadata(src).num_rows == 0:
                     continue
                 keep.append((root, src))
         rels: list[str] = []
@@ -988,6 +993,25 @@ class Table:
         if self.config.bloom_index and self.config.record_key:
             self._write_bloom_filters(instant, rels)
         return rels
+
+    @staticmethod
+    def _joinless(df: DataFrame) -> bool:
+        return "Join" not in df._jdf.queryExecution().analyzed().toString()
+
+    def _static_write_width(self, df: DataFrame) -> int:
+        """Task count of a static hash-on-partition write: the table's live
+        partition dirs, read from the timeline (no job), or the batch's
+        planned partition count when that is larger, so a batch opening many
+        new partitions still writes in parallel; capped at the session's
+        shuffle width, which is also the width of a write into an empty
+        table. Each partition value still lands wholly in one task, so the
+        file layout is the same at any width."""
+        session = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        live, _ = self.timeline.live_files()
+        if not live:
+            return session
+        dirs = {os.path.dirname(r) for r in live}
+        return min(session, max(len(dirs), _input_partitions(df)))
 
     # -------------------------------------------------------- col-stats index
 
@@ -3293,7 +3317,7 @@ class Table:
         )
         return instant
 
-    #: above this many live log bytes the distinct log-key set stops being
+    #: above this many live log bytes the log-key set stops being
     #: safely broadcastable and the MOR merge falls back to one global
     #: key-shuffle window over base ∪ logs
     MOR_BROADCAST_LOG_BYTES = 256 * 1024 * 1024
@@ -3322,12 +3346,16 @@ class Table:
     ) -> DataFrame:
         """MOR snapshot merge whose shuffle is sized to the LOGS, not the table:
         base rows whose key no log touches stream through with NO exchange
-        (broadcast anti-join against the distinct log keys); only rows of
+        (broadcast anti-join against the log keys); only rows of
         log-touched keys (their base versions ∪ all logs) go through the
         key-window resolution — a shuffle of O(changes). This is the Spark
         re-expression of Hudi's per-file-group merge (logs are tiny relative
         to base, so the merge work should be too); log size is known
         driver-side from the manifest, so the plan choice costs no job.
+        The log keys are broadcast as read, duplicates included: a broadcast
+        semi/anti join ignores duplicates, and a ``distinct`` would add an
+        exchange (a Spark job) whose only consumer is the broadcast, while
+        MOR_BROADCAST_LOG_BYTES already bounds the build side.
         Falls back to the single global key-window merge for pk-less tables or
         when live log bytes exceed MOR_BROADCAST_LOG_BYTES. Base files never
         carry live tombstones (initial loads and compaction outputs are merged
@@ -3341,7 +3369,7 @@ class Table:
         )
         if not self.config.record_key or log_bytes > self.MOR_BROADCAST_LOG_BYTES:
             return self._merge_mor(base.unionByName(logs)).drop(META_DELETED)
-        keys = F.broadcast(logs.select(META_KEY).distinct())
+        keys = F.broadcast(logs.select(META_KEY))
         untouched = base.join(keys, META_KEY, "left_anti").filter(~F.col(META_DELETED))
         touched = base.join(keys, META_KEY, "left_semi")
         resolved = self._merge_mor(touched.unionByName(logs))
@@ -3398,7 +3426,7 @@ class Table:
         before scanning (J5 — the whole point of ``hoodie.index.type=BUCKET``:
         O(table/n_buckets) IO for a key fetch instead of a full scan)."""
         if not self.config.record_key or not (self.config.n_buckets or self.config.bucket_ranges):
-            df = self.read()
+            df = self.read(with_meta=True)
         else:
             # the bucket hash is recomputed driver-side (hashing.py mirrors
             # Spark's xxhash64 bit-for-bit, pinned by tests) — a point lookup
@@ -3442,10 +3470,39 @@ class Table:
             ]
             # merged subset view: tombstones and superseded versions within the
             # bucket resolve exactly like a full snapshot read would
-            df = self._snapshot_of(files, sorted(rels)).drop(*META_COLS)
+            df = self._snapshot_of(files, sorted(rels))
+        key = self._key_literal(key_vals)
+        if key is not None:
+            # the merge windows are partitioned by the record key, so this
+            # filter moves below them: into both parquet scans and the
+            # log-key broadcast, instead of merging the table for one row
+            df = df.filter(F.col(META_KEY) == key)
+        df = df.drop(*META_COLS)
         for k, v in key_vals.items():
             df = df.filter(F.col(k) == v)
         return df
+
+    def _key_literal(self, key_vals: dict):
+        """The ``_hoodie_record_key`` of the row ``key_vals`` names, built the
+        way ``_key_expr`` builds it, or None unless every record-key column
+        has a value of its own type (an in-range int for an integral column,
+        a str for a string column). Other values go through Spark's
+        comparison coercion in the data-column filter, and the key-string
+        filter could then disagree with it."""
+        if not self.config.record_key:
+            return None
+        parts = []
+        for k in self.config.record_key:
+            v, t = key_vals.get(k), self.schema[k].dataType
+            bits = _INT_BITS.get(t.simpleString())
+            if bits:
+                ok = type(v) is int and -(1 << bits - 1) <= v < 1 << bits - 1
+            else:
+                ok = t == StringType() and isinstance(v, str)
+            if not ok:
+                return None
+            parts.append(F.lit(v).cast(t).cast("string"))
+        return F.concat_ws(":", *parts)
 
     def read_optimized(self, with_meta: bool = False) -> DataFrame:
         """MOR read-optimized view: base files only (pre-compaction state)."""
@@ -3597,7 +3654,14 @@ class Table:
         bounded): ``files_lo``/``files_end`` are the live-file maps at the
         window edges, ``window_live`` the end-cut files added by the window,
         ``changed_pred`` the per-row predicate marking rows last written by a
-        window instant."""
+        window instant.
+
+        I/U/D come from ONE full outer join on the key between the before and
+        after snapshots, so each side's merge runs once: a key present after
+        and last written in the window is I (absent before) or U; a key
+        present before and absent after is D; everything else is unchanged
+        or netted out inside the window. Both the small two-snapshot path
+        and the key-pruned path feed this join."""
         removed_in_window = [r for r in files_lo if r not in files_end]
         touched_rels = sorted(set(window_live) | set(removed_in_window))
         row = F.struct(*self.data_cols)
@@ -3644,27 +3708,34 @@ class Table:
             before_snap = self._snapshot_of(files_lo, before_rels).join(touched, META_KEY, "left_semi")
             after_snap = self._snapshot_of(files_end, after_rels).join(touched, META_KEY, "left_semi")
         b = before_snap.select(F.col(META_KEY).alias("key"), row.alias("before"))
-        changed = after_snap.filter(changed_pred).select(
+        # the after side carries its image only for rows the window wrote:
+        # when a side is not already partitioned by key (no live logs), the
+        # join shuffles every key of it, but no unchanged row image
+        changed = F.coalesce(changed_pred, F.lit(False))
+        a = after_snap.select(
             F.col(META_KEY).alias("key"),
-            row.alias("after"),
-            F.col(META_COMMIT).alias("commit_time"),
+            changed.alias("__changed"),
+            F.when(changed, row).alias("after"),
+            F.when(changed, F.col(META_COMMIT)).alias("commit_time"),
         )
-        alive = after_snap.select(F.col(META_KEY).alias("key"))
-        upserted = changed.join(b, "key", "left_outer").select(
-            "key",
-            F.when(F.col("before").isNull(), F.lit("I")).otherwise(F.lit("U")).alias("op"),
-            "before",
-            "after",
-            "commit_time",
+        # a null __changed means "key absent after" (a row struct is never
+        # null, so neither is a present before image): keep keys last written
+        # in the window (I/U) and keys gone by the end (D)
+        absent_after = F.col("__changed").isNull()
+        return (
+            b.join(a, "key", "full_outer")
+            .filter(absent_after | F.col("__changed"))
+            .select(
+                "key",
+                F.when(absent_after, F.lit("D"))
+                .when(F.col("before").isNull(), F.lit("I"))
+                .otherwise(F.lit("U"))
+                .alias("op"),
+                "before",
+                "after",
+                "commit_time",
+            )
         )
-        deleted = b.join(alive, "key", "left_anti").select(
-            "key",
-            F.lit("D").alias("op"),
-            "before",
-            F.lit(None).cast(upserted.schema["after"].dataType).alias("after"),
-            F.lit(None).cast("string").alias("commit_time"),
-        )
-        return upserted.unionByName(deleted)
 
     def latest_instant(self) -> str | None:
         insts = self.timeline.completed_data_instants()
